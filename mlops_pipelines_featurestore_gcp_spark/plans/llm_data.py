@@ -397,9 +397,7 @@ def d05_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     arithmetic in the blocking so both engines agree bit-for-bit with no
     summation-order risk) and the oracle replays the identical blocking —
     the documented LSH recall trade-off is shared exactly. The exact
-    all-pairs baseline remains ``similarity.cosine_neardup_pairs``;
-    md5-derived random hyperplanes (for axis-degenerate data) remain
-    ``similarity.lsh_blocked_pairs``."""
+    all-pairs baseline remains ``similarity.cosine_neardup_pairs``."""
     emb = load_table(spark, "embeddings", sf_dir)
     return similarity.coord_sign_blocked_pairs(
         emb, dim=_D05_DIM, coords_per_table=_D05_COORDS, tables=_D05_TABLES, threshold=0.45
@@ -1353,7 +1351,7 @@ def _cell_md5s(table_dir: str, cells: list[str]) -> dict[str, list[tuple[str, st
 )
 def s12_index_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Small-files maintenance on a persisted IVF-PQ index
-    (``similarity.ivfpq_compact`` / ``compact_cell_partitions``): every
+    (``similarity.compact_cell_partitions`` on ``{path}/codes``): every
     upsert appends one file set per touched cell, so a long-lived index
     pays per-file open/footer cost on every probe until a compaction
     merges the fragments (measured 4.4× warm-probe win on the fragmented
@@ -1400,12 +1398,12 @@ def s12_index_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     probe = sorted(untouched, key=lambda d: _h.md5(d.encode()).hexdigest())[:32]
     md5_before = _cell_md5s(codes_dir, probe)
     rows_per_file = 1 << 20
-    report = similarity.ivfpq_compact(
-        spark, path, max_files_per_cell=1, rows_per_file=rows_per_file
+    report = similarity.compact_cell_partitions(
+        spark, codes_dir, max_files_per_cell=1, rows_per_file=rows_per_file
     )
     census_after = _cell_file_census(codes_dir)
-    report2 = similarity.ivfpq_compact(
-        spark, path, max_files_per_cell=1, rows_per_file=rows_per_file
+    report2 = similarity.compact_cell_partitions(
+        spark, codes_dir, max_files_per_cell=1, rows_per_file=rows_per_file
     )
     after = similarity.ivfpq_search(spark, path, corpus, queries, dim=64, k=5, shortlist=48)
 

@@ -12,8 +12,10 @@ import os
 
 from pyspark.sql import SparkSession
 
-# Defaults tuned for the test harness (local[32], 128 GiB box). On a cluster,
-# shuffle.partitions should scale with total cores (AQE coalesces the excess).
+# Defaults tuned for the test harness. Shuffle partitions and driver memory
+# come from the environment when the session starts (``_session_confs``); on
+# a cluster, shuffle.partitions should scale with total cores (AQE coalesces
+# the excess).
 _DEFAULT_CONFS: dict[str, str] = {
     # Adaptive query execution: runtime re-plan, skew-join splitting, and
     # post-shuffle partition coalescing — the single most important flag for
@@ -38,11 +40,26 @@ _DEFAULT_CONFS: dict[str, str] = {
     # nanosecond timestamps, so read the raw int64 and convert in the
     # catalog (truncate to µs, matching DuckDB's read of the same file).
     "spark.sql.legacy.parquet.nanosAsLong": "true",
-    # Shuffle sizing for the local harness; cluster deploys override.
-    "spark.sql.shuffle.partitions": os.environ.get("SPARK_GRAFT_CPUS", "32"),
-    "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"),
     "spark.ui.enabled": "false",
 }
+
+
+def _session_confs(overrides: dict) -> dict[str, str]:
+    """Defaults, then the environment read NOW (not at import, so a caller
+    may set ``SPARK_GRAFT_CPUS``/``SPARK_GRAFT_DRIVER_MEM`` after importing
+    the package), then ``overrides``."""
+    confs = dict(_DEFAULT_CONFS)
+    # shuffle sizing for the local harness; cluster deploys override
+    confs["spark.sql.shuffle.partitions"] = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if not mem:
+        # half the host's RAM in whole GiB, 1g..24g (24g suits a 128 GiB box;
+        # a fixed 24g over-commits a small host)
+        host = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+        mem = f"{max(1, min(24, host // (2 << 30)))}g"
+    confs["spark.driver.memory"] = mem
+    confs.update({k: str(v) for k, v in overrides.items()})
+    return confs
 
 
 def get_spark(app_name: str = "mlops-featurestore-spark", **overrides: str) -> SparkSession:
@@ -60,8 +77,6 @@ def get_spark(app_name: str = "mlops-featurestore-spark", **overrides: str) -> S
     if repo_dir not in py_path.split(os.pathsep):
         os.environ["PYTHONPATH"] = repo_dir + (os.pathsep + py_path if py_path else "")
     builder = SparkSession.builder.appName(app_name).master(f"local[{cpus}]")
-    confs = dict(_DEFAULT_CONFS)
-    confs.update({k: str(v) for k, v in overrides.items()})
-    for key, value in confs.items():
+    for key, value in _session_confs(overrides).items():
         builder = builder.config(key, value)
     return builder.getOrCreate()

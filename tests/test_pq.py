@@ -85,16 +85,6 @@ def test_pq_topk_accepts_prebuilt_index(spark):
     assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
 
 
-def test_persisted_pq_index_roundtrip(spark, tmp_path):
-    emb = _emb(spark, n=60)
-    queries = emb.where(F.col("vec_id") % 10 == 0)
-    path = str(tmp_path / "pqidx")
-    similarity.build_pq_index(emb, path, dim=DIM, m=M, sample=60)
-    a = similarity.pq_search(spark, path, emb, queries, dim=DIM, k=3, shortlist=10)
-    b = similarity.pq_topk(emb, queries, dim=DIM, m=M, k=3, shortlist=10, sample=60)
-    assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
-
-
 def test_ivf_pq_topk_contract_and_recall(spark):
     emb = _emb(spark, n=120)
     queries = emb.where(F.col("vec_id") % 10 == 0)
@@ -149,28 +139,6 @@ def test_ivf_pq_probe_all_cells_exhaustive_equals_brute_force(spark):
         n_centroids=8, n_probe=8,
     )
     assert _as_pairs(got) == _as_pairs(truth)
-
-
-def test_pq_upsert_appends_batch_and_search_sees_it(spark, tmp_path):
-    emb = _emb(spark, n=50)
-    old = emb.where(F.col("vec_id") < 40)
-    new = emb.where(F.col("vec_id") >= 40)
-    path = str(tmp_path / "pqidx")
-    similarity.build_pq_index(old, path, dim=DIM, m=M, sample=40)
-    n0 = spark.read.parquet(f"{path}/codes").count()
-    similarity.pq_upsert(spark, path, new)
-    codes = spark.read.parquet(f"{path}/codes")
-    assert codes.count() == n0 + 10  # batch-proportional append
-    # upserted ids are encoded with the ORIGINAL codebooks: re-encoding
-    # the same rows yields identical codes
-    books = similarity.pq_train(old, dim=DIM, m=M, sample=40)
-    expect = {r.neighbor_id: list(r.codes) for r in similarity.pq_encode(new, books).collect()}
-    got = {r.neighbor_id: list(r.codes) for r in codes.where(F.col("neighbor_id") >= 40).collect()}
-    assert got == expect
-    # search over the upserted index can return new ids
-    queries = emb.where(F.col("vec_id") == 0)
-    out = similarity.pq_search(spark, path, emb, queries, dim=DIM, k=50 - 1, shortlist=60)
-    assert {r.neighbor_id for r in out.collect()} == set(range(1, 50))
 
 
 def test_pq_shortlist_is_partition_layout_independent(spark):
@@ -250,7 +218,7 @@ def test_persisted_ivfpq_index_prebuilt_matches_incall(spark, tmp_path):
 
 def test_ivfpq_codes_partitioned_by_cell(spark, tmp_path):
     """The persisted code table must be cell-partitioned so probes prune
-    partitions at the source (the ivf_search layout, 32× smaller)."""
+    partitions at the source (IVF pruning on the 32×-smaller codes)."""
     import os
 
     emb = _emb(spark, n=60)
@@ -296,8 +264,8 @@ def test_opq_rotation_persists_and_clears(spark, tmp_path):
     import os
 
     emb = _emb(spark, n=60)
-    path = str(tmp_path / "pq_opq")
-    similarity.build_pq_index(emb, path, dim=DIM, m=M, sample=60, seed=7, opq=True)
+    path = str(tmp_path / "ivfpq_opq_rot")
+    similarity.build_ivfpq_index(emb, path, dim=DIM, m=M, sample=60, seed=7, opq=True)
     rot = similarity._opq_read(spark, path)
     assert rot is not None and len(rot) == DIM and len(rot[0]) == DIM
     # the persisted rotation IS the s11 PCA basis (translation dropped)
@@ -310,17 +278,17 @@ def test_opq_rotation_persists_and_clears(spark, tmp_path):
     assert np.allclose(R @ R.T, np.eye(DIM), atol=1e-9)
     # rebuilding WITHOUT opq on the same path clears the stale rotation —
     # otherwise searches would rotate queries against unrotated codes
-    similarity.build_pq_index(emb, path, dim=DIM, m=M, sample=60, seed=7)
+    similarity.build_ivfpq_index(emb, path, dim=DIM, m=M, sample=60, seed=7)
     assert similarity._opq_read(spark, path) is None
     assert not os.path.exists(f"{path}/opq")
 
 
 def test_opq_pq_search_rescores_in_raw_space(spark, tmp_path):
     emb = _emb(spark, n=60)
-    path = str(tmp_path / "pq_opq2")
-    similarity.build_pq_index(emb, path, dim=DIM, m=M, sample=60, seed=7, opq=True)
+    path = str(tmp_path / "ivfpq_opq2")
+    similarity.build_ivfpq_index(emb, path, dim=DIM, m=M, sample=60, seed=7, opq=True)
     q = emb.where(F.col("vec_id") % 10 == 0)
-    out = similarity.pq_search(spark, path, emb, q, dim=DIM, k=3, shortlist=16).collect()
+    out = similarity.ivfpq_search(spark, path, emb, q, dim=DIM, k=3, shortlist=16).collect()
     assert out
     vecs = {r.vec_id: np.asarray(r.embedding, dtype=np.float64) for r in emb.collect()}
     per_q = {}
@@ -337,35 +305,35 @@ def test_opq_pq_search_rescores_in_raw_space(spark, tmp_path):
 
 
 def test_opq_upsert_encodes_in_rotated_basis(spark, tmp_path):
-    # a vector upserted into an OPQ index must get the SAME codes the
-    # build-time encode gave it — the build/query consistency the wiring
-    # exists to guarantee
+    # a vector upserted into an OPQ index must get the SAME cell and codes
+    # the build-time encode gave it — the build/query consistency the
+    # wiring exists to guarantee
     emb = _emb(spark, n=60)
     base = emb.where(F.col("vec_id") % 2 == 0)
     extra = emb.where(F.col("vec_id") % 2 == 1)
-    p_all = str(tmp_path / "pq_all")
-    p_ups = str(tmp_path / "pq_ups")
-    similarity.build_pq_index(emb, p_all, dim=DIM, m=M, sample=60, seed=7, opq=True)
-    # build the upsert index from the SAME fitted state: copy codebooks +
+    p_all = str(tmp_path / "ivfpq_all")
+    p_ups = str(tmp_path / "ivfpq_ups")
+    similarity.build_ivfpq_index(emb, p_all, dim=DIM, m=M, sample=60, seed=7, opq=True)
+    # build the upsert index from the SAME fitted state: quantizers +
     # rotation by building on the full corpus, then rewrite codes from base
-    similarity.build_pq_index(emb, p_ups, dim=DIM, m=M, sample=60, seed=7, opq=True)
+    similarity.build_ivfpq_index(emb, p_ups, dim=DIM, m=M, sample=60, seed=7, opq=True)
     import shutil
 
     shutil.rmtree(f"{p_ups}/codes")
     rot = similarity._opq_read(spark, p_ups)
-    books_rows = spark.read.parquet(f"{p_ups}/codebooks").collect()
-    mm = max(r["s"] for r in books_rows) + 1
-    ksub = max(r["j"] for r in books_rows) + 1
-    books = np.empty((mm, ksub, len(books_rows[0]["centroid"])))
-    for r in books_rows:
-        books[r["s"], r["j"]] = r["centroid"]
-    similarity.pq_encode(
-        similarity._opq_apply(base, rot, vec_col="embedding"), books
-    ).write.mode("overwrite").parquet(f"{p_ups}/codes")
-    similarity.pq_upsert(spark, p_ups, extra)
-    codes_all = {r.neighbor_id: list(r.codes) for r in spark.read.parquet(f"{p_all}/codes").collect()}
-    codes_ups = {r.neighbor_id: list(r.codes) for r in spark.read.parquet(f"{p_ups}/codes").collect()}
-    assert codes_ups == codes_all
+    cells, books = similarity._ivfpq_state_read(spark, p_ups)
+    similarity.ivfpq_encode(
+        similarity._opq_apply(base, rot, vec_col="embedding"), cells, books
+    ).write.partitionBy("cell").parquet(f"{p_ups}/codes")
+    similarity.ivfpq_upsert(spark, p_ups, extra)
+
+    def codes(p):
+        return {
+            r.neighbor_id: (r.cell, list(r.codes))
+            for r in spark.read.parquet(f"{p}/codes").collect()
+        }
+
+    assert codes(p_ups) == codes(p_all)
 
 
 def test_opq_ivfpq_search_contract_and_recall(spark, tmp_path):
@@ -463,7 +431,7 @@ def test_ivfpq_compact_merges_fragmented_cells_search_bit_equal(spark, tmp_path)
     assert any(len(v) > 1 for v in before_files.values())  # fragmentation real
     n_rows_before = spark.read.parquet(f"{path}/codes").count()
 
-    report = similarity.ivfpq_compact(spark, path, max_files_per_cell=1)
+    report = similarity.compact_cell_partitions(spark, f"{path}/codes", max_files_per_cell=1)
     assert report["cells_compacted"] >= 1
     after_files = _cell_files(f"{path}/codes")
     for d, fs in after_files.items():
@@ -483,21 +451,9 @@ def test_ivfpq_compact_dedupes_exact_reupsert_rows_only(spark, tmp_path):
     similarity.ivfpq_upsert(spark, path, batch)
     similarity.ivfpq_upsert(spark, path, batch)  # the documented re-ingest dup
     assert spark.read.parquet(f"{path}/codes").count() == 70
-    similarity.ivfpq_compact(spark, path, max_files_per_cell=0)  # rewrite all
+    similarity.compact_cell_partitions(spark, f"{path}/codes", max_files_per_cell=0)  # rewrite all
     assert spark.read.parquet(f"{path}/codes").count() == 60  # exact dups gone
     # a second compact is a no-op fixpoint at the merged layout
-    report = similarity.ivfpq_compact(spark, path, max_files_per_cell=1)
+    report = similarity.compact_cell_partitions(spark, f"{path}/codes", max_files_per_cell=1)
     assert report["cells_compacted"] == 0
 
-
-def test_ivf_compact_wraps_assigned_table(spark, tmp_path):
-    emb = _emb(spark, n=40)
-    path = str(tmp_path / "ivf_cmp")
-    similarity.build_ivf_index(emb, path, n_centroids=4, sample=40)
-    similarity.ivf_upsert(spark, path, _emb(spark, n=10, seed=11).withColumn(
-        "vec_id", F.col("vec_id") + F.lit(900)))
-    report = similarity.ivf_compact(spark, path, max_files_per_cell=1)
-    assert report["cells_compacted"] >= 1
-    q = emb.where(F.col("vec_id") % 10 == 0)
-    out = similarity.ivf_search(spark, path, q, k=3).collect()
-    assert out  # index still serves after compaction

@@ -4,6 +4,8 @@ baseline with the identical rounded cosine; blocking only removes pairs."""
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -23,38 +25,35 @@ def _pairs(df):
 def test_blocked_variants_are_subsets_of_exact(emb):
     exact = _pairs(similarity.cosine_neardup_pairs(emb, threshold=0.4, dim=64))
     coord = _pairs(similarity.coord_sign_blocked_pairs(emb, threshold=0.4, dim=64))
-    hyper = _pairs(similarity.lsh_blocked_pairs(emb, threshold=0.4, dim=64))
     assert set(coord) <= set(exact)
-    assert set(hyper) <= set(exact)
     for k, v in coord.items():
-        assert v == exact[k]
-    for k, v in hyper.items():
         assert v == exact[k]
 
 
 def test_hyperplane_signature_deterministic(emb):
-    a = similarity.hyperplane_signature(emb, vec_col="embedding", planes=8, dim=64)
-    b = similarity.hyperplane_signature(emb, vec_col="embedding", planes=8, dim=64)
-    ra = {r.vec_id: r.sig for r in a.collect()}
-    rb = {r.vec_id: r.sig for r in b.collect()}
+    a = similarity.hyperplane_signatures(emb, vec_col="embedding", tables=1, planes=8, dim=64)
+    b = similarity.hyperplane_signatures(emb, vec_col="embedding", tables=1, planes=8, dim=64)
+    ra = {r.vec_id: r.sigs for r in a.collect()}
+    rb = {r.vec_id: r.sigs for r in b.collect()}
     assert ra == rb
-    assert all(0 <= s < 256 for s in ra.values())
+    assert all(len(s) == 1 and 0 <= s[0] < 256 for s in ra.values())
 
 
 def test_ivf_index_persist_and_search(spark, emb, tmp_path):
-    """build_ivf_index → ivf_search returns the SAME answer as the in-memory
-    ivf_topk (same seed → same quantizer), and only probed cells are read."""
-    path = str(tmp_path / "ivf")
+    """build_ivfpq_index → ivfpq_search returns the SAME answer as the
+    in-call ivf_pq_topk (same seed → same quantizers), and only probed
+    cells are read."""
+    path = str(tmp_path / "ivfpq")
     queries = emb.where(F.col("vec_id") % 50 == 0)
-    similarity.build_ivf_index(emb, path, n_centroids=8, seed=42)
-    searched = similarity.ivf_search(spark, path, queries, n_probe=3, k=5, dim=64)
-    in_mem = similarity.ivf_topk(emb, queries, n_centroids=8, n_probe=3, k=5, seed=42, dim=64)
+    similarity.build_ivfpq_index(emb, path, dim=64, m=8, n_centroids=8, seed=42)
+    searched = similarity.ivfpq_search(spark, path, emb, queries, dim=64, n_probe=3, k=5)
+    in_mem = similarity.ivf_pq_topk(emb, queries, dim=64, m=8, n_centroids=8, n_probe=3, k=5, seed=42)
     got = sorted((r.query_id, r.neighbor_id, r.cos_sim, r.rnk) for r in searched.collect())
     want = sorted((r.query_id, r.neighbor_id, r.cos_sim, r.rnk) for r in in_mem.collect())
     assert got == want and len(got) > 0
-    # the assigned table is cell-partitioned: probing must not scan all cells
+    # the code table is cell-partitioned: probing must not scan all cells
     plan = searched._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan or "dynamicpruning" in plan, plan
+    assert re.search(r"PartitionFilters: \[cell#\d+ IN \(", plan), plan
 
 
 def test_quantized_topk_recall_and_exact_scores(spark):
@@ -129,60 +128,28 @@ def test_semantic_dedup_pairs_deterministic_across_runs(emb):
     assert a == b
 
 
-def test_semantic_dedup_keep_one_per_component(emb, spark):
-    pairs = similarity.semantic_dedup_pairs(emb, n_clusters=8, threshold=0.4, dim=64)
-    keep = similarity.semantic_dedup_keep(emb, n_clusters=8, threshold=0.4, dim=64)
-    kept = {r.vec_id for r in keep.collect()}
-    all_ids = {r.vec_id for r in emb.select("vec_id").collect()}
-    assert kept <= all_ids
-    # every id either kept or reachable from a kept id through the pair graph
-    import collections
-
-    adj = collections.defaultdict(set)
-    for r in pairs.collect():
-        adj[r.id_a].add(r.id_b)
-        adj[r.id_b].add(r.id_a)
-    # union-find over pairs → components; exactly the min of each component kept
-    seen = set()
-    for start in list(adj):
-        if start in seen:
-            continue
-        comp, stack = set(), [start]
-        while stack:
-            n = stack.pop()
-            if n in comp:
-                continue
-            comp.add(n)
-            stack.extend(adj[n] - comp)
-        seen |= comp
-        assert len(comp & kept) == 1
-        assert min(comp) in kept
-    # ids in no pair are all kept
-    assert (all_ids - set(adj)) <= kept
-
-
 def test_ivf_upsert_appends_to_cells(spark, emb, tmp_path):
-    path = str(tmp_path / "ivf")
+    path = str(tmp_path / "ivfpq")
     base = emb.where(F.col("vec_id") % 2 == 0)
     extra = emb.where(F.col("vec_id") % 2 == 1)
-    similarity.build_ivf_index(base, path, n_centroids=4)
-    n_before = spark.read.parquet(f"{path}/assigned").count()
-    similarity.ivf_upsert(spark, path, extra)
-    after = spark.read.parquet(f"{path}/assigned")
+    similarity.build_ivfpq_index(base, path, dim=64, m=8, n_centroids=4)
+    n_before = spark.read.parquet(f"{path}/codes").count()
+    similarity.ivfpq_upsert(spark, path, extra)
+    after = spark.read.parquet(f"{path}/codes")
     assert after.count() == n_before + extra.count()
     # upserted vectors are queryable through the same persisted-index search
-    q = extra.limit(3)
-    hits = similarity.ivf_search(spark, path, q, n_probe=4, k=3)
+    hits = similarity.ivfpq_search(spark, path, emb, extra.limit(3), dim=64, n_probe=4, k=3)
     assert hits.count() > 0
     # every upserted vector landed in its argmin centroid cell
     import numpy as np
 
-    cents = {r.cell: np.array(r.centroid) for r in spark.read.parquet(f"{path}/centroids").collect()}
-    sample = after.join(extra.select(F.col("vec_id").alias("neighbor_id")), "neighbor_id").limit(20).collect()
+    cells, _books = similarity._ivfpq_state_read(spark, path)
+    vecs = {r.vec_id: np.array(r.embedding, dtype=float) for r in extra.collect()}
+    sample = after.where(F.col("neighbor_id") % 2 == 1).limit(20).collect()
+    assert sample
     for r in sample:
-        v = np.array(r.cv, dtype=float)
-        best = min(cents, key=lambda c: (float(((v - cents[c]) ** 2).sum()), c))
-        assert r.cell == best
+        d2 = ((cells - vecs[r.neighbor_id]) ** 2).sum(axis=1)
+        assert d2[r.cell] <= d2.min() + 1e-9
 
 
 def test_auto_cell_sizing_scales_with_corpus():
@@ -541,36 +508,14 @@ def test_quantizer_fits_raise_clearly_on_empty_corpus(emb):
         similarity.ivf_topk(empty_c, emb.limit(1), n_centroids=8, n_probe=3, k=5, dim=64)
 
 
-def test_chunked_query_topk_exact_union(spark):
-    # chunk-and-union as an operator (r12): md5-chunked query batches
-    # through the same tier must union to EXACTLY the single-call result
-    # (per-query top-k independence), including when every tier call
-    # sees only a few queries.
-    import numpy as np
-
-    rng = np.random.RandomState(5)
-    rows = [(i, [float(x) for x in rng.randn(16)]) for i in range(120)]
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    queries = emb.where(F.col("vec_id") % 3 == 0)  # 40 queries
-    direct = sorted(map(tuple, similarity.brute_force_topk(
-        emb, queries, k=3, dim=16).collect()))
-    chunked = sorted(map(tuple, similarity.chunked_query_topk(
-        similarity.brute_force_topk, emb, queries, max_rows=10, k=3, dim=16,
-    ).collect()))
-    assert chunked == direct
-    # under the cap: degenerates to one direct call
-    small = similarity.chunked_query_topk(
-        similarity.brute_force_topk, emb, queries, max_rows=4096, k=3, dim=16)
-    assert sorted(map(tuple, small.collect())) == direct
-
-
 def test_collect_query_rows_error_names_the_helper(spark):
+    # the guard's message is the recipe: md5-chunk the queries and union
+    # the per-chunk results, or switch to a join-based tier
     big = spark.range(0, similarity.MAX_QUERY_ROWS + 8).select(
         F.col("id").alias("vec_id"))
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="chunked_query_topk"):
+    with pytest.raises(ValueError, match="md5-of-id chunks") as err:
         similarity._collect_query_rows(big, "test")
+    assert "union" in str(err.value) and "lsh_topk/ivf_topk" in str(err.value)
 
 
 def test_brute_force_small_blocks_exclude_self_and_match_naive(spark):
@@ -616,3 +561,28 @@ def test_brute_force_small_blocks_exclude_self_and_match_naive(spark):
         )[:10]
         for rnk, (sim, c) in enumerate(scored, start=1):
             assert got[(q, rnk)] == (c, sim), (q, rnk)
+
+
+def test_brute_force_drops_null_vectors_and_ranks_degenerate_last(spark):
+    # a NULL vector (either side) has no cosine: it is dropped, not fed to
+    # the kernel; a zero-norm vector's 0/0 cosine is NULL and ranks last
+    import numpy as np
+
+    rng = np.random.RandomState(4)
+    rows = [(i, [float(x) for x in rng.randn(8)]) for i in range(12)]
+    rows += [(100, [0.0] * 8), (101, None)]
+    with_null = spark.createDataFrame(rows, "vec_id long, embedding array<double>").repartition(3)
+    without = with_null.where(F.col("vec_id") != 101)
+    got = similarity.brute_force_topk(
+        with_null, with_null.where(F.col("vec_id").isin(0, 5, 101)), k=20, dim=8
+    ).collect()
+    want = similarity.brute_force_topk(
+        without, without.where(F.col("vec_id").isin(0, 5)), k=20, dim=8
+    ).collect()
+    assert sorted(map(tuple, got)) == sorted(map(tuple, want))
+    assert {r.query_id for r in got} == {0, 5}
+    for q in (0, 5):
+        ranked = sorted((r for r in got if r.query_id == q), key=lambda r: r.rnk)
+        assert len(ranked) == 12  # 11 others + the degenerate, never the NULL
+        assert ranked[-1].neighbor_id == 100 and ranked[-1].cos_sim is None
+        assert all(r.cos_sim is not None for r in ranked[:-1])

@@ -20,6 +20,7 @@ REST API.  Usage: python tools/rollup_refresh_profile.py [sf_dir]
 
 from __future__ import annotations
 
+import atexit
 import json
 import os
 import shutil
@@ -103,9 +104,19 @@ def main() -> None:
         F.col("value").alias("v"),
     )
 
+    stores: set[str] = set()
+
+    @atexit.register
+    def _remove_stores() -> None:
+        # throwaway per-variant state, unlike the reusable 10× fixture:
+        # removed however the run ends
+        for p in stores:
+            shutil.rmtree(p, ignore_errors=True)
+
     def fresh_store(tag: str) -> ContinuousAggregate:
         path = f"/tmp/rollup10x_store_{tag}"
         shutil.rmtree(path, ignore_errors=True)
+        stores.add(path)
         return ContinuousAggregate(
             path, time_col="t", value_col="v", keys=["event_type"],
             bucket_width=WIDTH,

@@ -9,7 +9,9 @@ ground truth computed IN THE SAME representation (raw / PCA-rotated /
 whitened). Mean-centering changes the cosine task (cosine is
 origin-dependent), so cross-space recalls are not comparisons of the
 same ranking — each row is the quantizer's fidelity to exact search in
-that space, which is exactly the quantity OPQ optimizes.
+that space, which is exactly the quantity OPQ optimizes. Two more rows
+measure the persisted IVF-PQ index built with and without its ``opq``
+rotation, both against the raw exact ground truth.
 
 Usage: python tools/whitening_gain.py [sf_dir] [n_queries] [k]
 """
@@ -73,11 +75,12 @@ def main() -> int:
         )
         recall_at_k(spark, emb_w, q_w, dim=dim, k=k, label=label)
 
-    # r10: the INTEGRATED path — build_pq_index(opq=...) + pq_search. The
-    # opq rotation is translation-free and the rescore runs in raw space,
-    # so BOTH rows score against the SAME raw exact ground truth (unlike
-    # the within-representation rows above) — this is the user-visible
-    # recall difference of flipping the build flag.
+    # the INTEGRATED path — build_ivfpq_index(opq=...) + ivfpq_search on
+    # the persisted index. The opq rotation is translation-free and the
+    # rescore runs in raw space, so BOTH rows score against the SAME raw
+    # exact ground truth (unlike the within-representation rows above) —
+    # this is the user-visible recall difference of flipping the build
+    # flag.
     from mlops_pipelines_featurestore_gcp_spark.sources.scratch import scratch_dir
 
     exact = similarity.brute_force_topk(emb, queries, dim=dim, k=k).select(
@@ -86,8 +89,8 @@ def main() -> int:
     total = exact.count()
     for opq, label in ((False, "index raw"), (True, "index opq-rotated")):
         path = scratch_dir(f"wg_idx_{int(opq)}", fresh=True, per_process=True)
-        similarity.build_pq_index(emb, path, dim=dim, m=8, opq=opq)
-        approx = similarity.pq_search(spark, path, emb, queries, dim=dim, k=k, shortlist=4 * k)
+        similarity.build_ivfpq_index(emb, path, dim=dim, m=8, opq=opq)
+        approx = similarity.ivfpq_search(spark, path, emb, queries, dim=dim, k=k, shortlist=4 * k)
         hits = approx.select("query_id", "neighbor_id").join(
             exact, ["query_id", "neighbor_id"]
         ).count()
